@@ -6,8 +6,9 @@
 Run from the repository root. Builds graft and the harness from source
 with the Scala compiler that ships in the Spark jars build.sbt names (cached under
 .bench_build/ by source hash), generates the workload's inputs from the
-seed under a per-run temp root in .bench_tmp/, runs the harness JVM, checks
-its outputs (DuckDB oracle for analytics), removes the temp root and
+seed under a per-run temp root in .bench_tmp/, runs the harness JVM on
+Spark local[<all cores>], checks its outputs (DuckDB oracle for
+analytics), removes the temp root and
 prints one JSON line: correct, attempted, failed and the metrics —
 end-to-end ones with --trace 0, per-layer ones with --trace 1. Traced
 runs also write their spans to .bench_out/.
@@ -25,7 +26,6 @@ import subprocess
 import sys
 import tempfile
 import time
-import zipfile
 
 HERE = os.path.dirname(os.path.abspath(__file__))
 sys.dont_write_bytecode = True
@@ -39,6 +39,9 @@ ADD_OPENS = ["java.base/java.lang", "java.base/java.lang.invoke",
              "java.base/java.util.concurrent.atomic", "java.base/sun.nio.ch",
              "java.base/sun.nio.cs", "java.base/sun.security.action",
              "java.base/sun.util.calendar"]
+# build.sbt's pinned run flags, with a 3 GiB heap in place of its 8 GiB:
+# the benchmark's inputs are small (block-storage peak under 10 MB), and
+# the heap stays pinned (Xms = Xmx) as build.sbt pins it.
 JVM_FLAGS = ["-Dspark.ui.enabled=false", "-Dspark.sql.session.timeZone=UTC",
              "-Xmx3g", "-Xms3g", "-XX:ReservedCodeCacheSize=512m", "-XX:+UseG1GC"]
 
@@ -103,34 +106,12 @@ def build(root, jars):
             os.makedirs(os.path.join(tmp, "bench"))
             scalac(jars, [], os.path.join(tmp, "graft"), main)
             scalac(jars, [os.path.join(tmp, "graft")], os.path.join(tmp, "bench"), bench)
-            for d in ("bench", "graft"):
-                jar(os.path.join(tmp, d), os.path.join(tmp, f"{d}.jar"))
             for old in os.listdir(base):   # earlier builds, of other sources
                 if not old.startswith((".", "build-")):
                     shutil.rmtree(os.path.join(base, old), ignore_errors=True)
+            open(os.path.join(tmp, "done"), "w").close()
             os.rename(tmp, out)
-            # A class-data-sharing archive of the classes a session start
-            # loads, mapped by every run to shorten JVM start. It records
-            # the jars' paths, so it is made at their final place.
-            with tempfile.TemporaryDirectory(dir=base) as cwd:
-                java(classpath(out), jars, ["-XX:ArchiveClassesAtExit=" + os.path.join(out, "classes.jsa"),
-                                            "perfbench.Harness", "--session-only", "1"],
-                     cwd, os.devnull)
-            open(os.path.join(out, "done"), "w").close()
-    return classpath(out)
-
-
-def classpath(build_dir):
-    return [os.path.join(build_dir, "bench.jar"), os.path.join(build_dir, "graft.jar")]
-
-
-def jar(classes, path):
-    """Pack a class directory as a jar: class-data sharing maps jars only."""
-    with zipfile.ZipFile(path, "w") as z:
-        for d, _, fs in sorted(os.walk(classes)):
-            for f in sorted(fs):
-                full = os.path.join(d, f)
-                z.write(full, os.path.relpath(full, classes))
+    return [os.path.join(out, "bench"), os.path.join(out, "graft")]
 
 
 def java(cp, jars, args, cwd, log):
@@ -154,9 +135,7 @@ def java(cp, jars, args, cwd, log):
 
 
 def run_jvm(cp, jars, tmp, args, log):
-    jsa = os.path.join(os.path.dirname(cp[0]), "classes.jsa")
-    rc = java(cp, jars, [f"-XX:SharedArchiveFile={jsa}", "-Xshare:auto", "perfbench.Harness"]
-              + args, tmp, log)
+    rc = java(cp, jars, ["perfbench.Harness"] + args, tmp, log)
     kept = os.path.join(os.path.dirname(os.path.dirname(tmp)), ".bench_out",
                         f"harness-{args[1]}.log")
     shutil.copy(log, kept)
@@ -180,7 +159,6 @@ def main():
     ap.add_argument("--seed", type=int, required=True)
     ap.add_argument("--seconds", type=float, required=True)
     ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
-    ap.add_argument("--cpus", default=str(os.cpu_count() or 4))
     a = ap.parse_args()
 
     root = os.getcwd()
@@ -194,7 +172,9 @@ def main():
         os.makedirs(os.path.join(root, d), exist_ok=True)
     tmp = tempfile.mkdtemp(prefix=f"{a.workload}-s{a.seed}-", dir=os.path.join(root, ".bench_tmp"))
     try:
-        data = os.path.join(tmp, "in")
+        # Graft keys some fixture directories by the input directory's
+        # basename, so every run's input directory has its own.
+        data = os.path.join(tmp, os.path.basename(tmp))
         t0 = time.perf_counter()
         gen.generate(a.workload, a.seed, data)
         gen_s = time.perf_counter() - t0
@@ -205,7 +185,7 @@ def main():
         run_jvm(cp, jars, tmp, ["--workload", a.workload, "--data", data,
                                 "--work", os.path.join(tmp, "work"),
                                 "--seconds", str(a.seconds), "--trace", str(a.trace),
-                                "--cpus", a.cpus, "--out", out, "--trace_out", trace_out],
+                                "--out", out, "--trace_out", trace_out],
                 os.path.join(tmp, "harness.log"))
         t_jvm = time.perf_counter()
         with open(out) as f:
@@ -234,6 +214,7 @@ def main():
     units = {m["name"]: m["unit"] for m in end_to_end + per_layer}
     metrics = {k: {"value": float(v or 0.0), "unit": units[k]} for k, v in values.items()}
     context = {k: res[k] for k in ("workload", "session_s", "prepare_s", "warmup_pass_s", "jit_settle_s",
+                                   "reference_s",
                                    "pass_walls_s", "gen_s", "op_tail_pct", "op_samples",
                                    "op_median_ms", "partial", "errors", "context")}
     context["oracle_s"] = res.get("oracle_s", 0.0)

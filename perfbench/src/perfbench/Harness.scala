@@ -26,14 +26,17 @@ final case class Sample(pass: Int, op: String, kind: String, ms: Double,
 /** A workload: set-up that can be repeated, a fixed per-pass op list,
   * and the checks and probes that run outside the timed passes. */
 trait Workload {
+  /** The workload's set-up; it runs `setupRounds` times and setup_s
+    * takes the median round. */
   def prepare(round: Int): Unit
-  /** How many times set-up runs; setup_s takes the median round. */
   def setupRounds: Int = 2
-  /** Warm-up passes before the timed ones. */
-  def warmupPasses: Int = 1
+  /** What only the correctness checks need (reference results), built
+    * after set-up and timed apart from it. */
+  def reference(): Unit = ()
   def ops(pass: Int): Seq[Op]
-  /** The warm-up pass: the same op names as a timed pass, so their
-    * results are compared; a workload may fold its reference work in. */
+  /** The one warm-up pass before the timed ones. Its ops carry the
+    * names of timed ops, whose results are compared with theirs; a
+    * workload may serve them from its reference results. */
   def warmupOps(pass: Int): Seq[Op] = ops(pass)
   def afterPass(pass: Int): Unit = ()
   /** Named correctness checks over the samples: (name, ok, detail). */
@@ -98,26 +101,23 @@ final class Runner(val spark: SparkSession, val tracer: Option[Tracer]) {
 }
 
 /** Entry point: one workload, one session, one driver thread issuing
-  * calls back to back (a closed loop with one client).
+  * calls back to back (a closed loop with one client), on Spark
+  * local[n] with n the machine's cores.
   *
   * {{{
   * java ... perfbench.Harness --workload analytics --data IN --work WORK \
-  *   --seconds 20 --trace 0 --cpus 4 --out result.json
+  *   --seconds 20 --trace 0 --out result.json
   * }}}
   */
 object Harness {
   def main(args: Array[String]): Unit = {
     val a = args.grouped(2).collect { case Array(k, v) => k.stripPrefix("--") -> v }.toMap
-    if (a.contains("session-only")) { // start and stop a session: the class-sharing dump
-      graft.Sessions.local("2", "perfbench-cds").range(10).count()
-      SparkSession.active.stop()
-      return
-    }
     val workload = a("workload")
     val seconds = a("seconds").toDouble
     val traced = a.getOrElse("trace", "0") == "1"
     val t0 = System.nanoTime()
-    val spark = graft.Sessions.local(a.getOrElse("cpus", "4"), s"perfbench-$workload")
+    val spark = graft.Sessions.local(Runtime.getRuntime.availableProcessors.toString,
+      s"perfbench-$workload")
     val sessionS = (System.nanoTime() - t0) / 1e9
     val runner = new Runner(spark, None)
     val w: Workload = workload match {
@@ -133,13 +133,15 @@ object Harness {
       System.err.println(f"[perfbench] set-up round $r $s%.2f s")
       s
     }
-    // Warm-up: whole passes, the first one cold (JIT, codegen, first
-    // reads). The first one's results join the cross-pass comparison.
-    val warm = (1 to w.warmupPasses).map(i => runner.runPass(w, -i, warmup = i == 1))
-    val warmSamples = warm.head._1
-    val warmS = warm.map(_._2).sum
+    val r0 = System.nanoTime()
+    w.reference()
+    val referenceS = (System.nanoTime() - r0) / 1e9
+    // Warm-up: one whole, cold pass (JIT, codegen, first reads). Its
+    // results join the cross-pass comparison.
+    val (warmSamples, warmS) = runner.runPass(w, -1, warmup = true)
     val settleS = settleJit()
-    val setupS = sessionS + Stats.median(prepareS) + warmS + settleS
+    // The JIT pause and the checks' reference work are context only.
+    val setupS = sessionS + Stats.median(prepareS) + warmS
     val steal0 = stealMs()
     val gc0 = gcMs()
 
@@ -177,8 +179,9 @@ object Harness {
       "setup_s" -> setupS,
       "session_s" -> sessionS,
       "prepare_s" -> prepareS,
-      "warmup_pass_s" -> warm.map(_._2),
+      "warmup_pass_s" -> warmS,
       "jit_settle_s" -> settleS,
+      "reference_s" -> referenceS,
       "pass_s" -> Stats.median(walls),
       "pass_walls_s" -> walls,
       // Read ops per second of their own latency: one client's throughput.

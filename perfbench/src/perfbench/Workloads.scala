@@ -107,10 +107,6 @@ final class AnalyticsWorkload(spark: SparkSession, data: String, work: String) e
   val queries: Seq[Q] = names.map(n => modules.find(_.name == n)
     .getOrElse(sys.error(s"$n is not registered in the analytics modules")))
 
-  /** The cold pass compiles 13 different plans; the timed pass only
-    * levels off after a second, short, warm-up pass. */
-  override def warmupPasses: Int = 2
-
   private val tables = Seq("region", "nation", "customer", "supplier", "part", "orders",
     "lineitem", "events", "documents", "embeddings")
   private def openAll(): Unit = tables.foreach { t =>
@@ -123,18 +119,11 @@ final class AnalyticsWorkload(spark: SparkSession, data: String, work: String) e
     Op(q.name, "SparkEntry", "read", ph => Io.fingerprint(ph)(q.fn(spark, data)))
   }
 
-  /** The warm-up pass also writes each oracle-paired query's result to
-    * parquet for the DuckDB comparison the launcher runs afterwards. */
-  override def warmupOps(pass: Int): Seq[Op] = ops(pass).zip(queries).map { case (op, q) =>
-    if (q.oracle.isEmpty) op
-    else op.copy(run = ph => {
-      q.fn(spark, data).write.mode("overwrite").parquet(s"$work/oracle/${q.name}")
-      op.run(ph)
-    })
-  }
-
+  /** Writes each oracle-paired query's result to parquet for the DuckDB
+    * comparison the launcher runs afterwards. */
   def checks(warm: Seq[Sample], timed: Seq[Sample]): Seq[(String, Boolean, String)] = {
     val paired = queries.filter(_.oracle.nonEmpty)
+    paired.foreach(q => q.fn(spark, data).write.mode("overwrite").parquet(s"$work/oracle/${q.name}"))
     Files.writeString(Paths.get(s"$work/oracle/oracle_sql.json"),
       Json(paired.map(q => q.name -> q.oracle.get).toMap))
     Nil
@@ -152,9 +141,9 @@ final class AnalyticsWorkload(spark: SparkSession, data: String, work: String) e
 
 /** One training-data pass through the facade: near-dup pairs, their
   * components, dedup survivors, quality and repetition signals,
-  * decontamination against an eval set, BPE merges, the shard manifest
-  * and the written token shards. Each stage reads the previous stage's
-  * collected result, as a pipeline that materialises between stages. */
+  * decontamination against an eval set, BPE merges and the shard
+  * manifest. Each stage reads the previous stage's collected result, as
+  * a pipeline that materialises between stages. */
 final class CurateWorkload(spark: SparkSession, data: String, work: String) extends Workload {
   private def corpus = spark.read.parquet(s"$data/corpus.parquet")
   private def evalSet = spark.read.parquet(s"$data/eval.parquet")
@@ -200,19 +189,8 @@ final class CurateWorkload(spark: SparkSession, data: String, work: String) exte
         Fp.of(rows)
       }),
       Op("shard_manifest", "ops.Bpe", "read", ph =>
-        Io.fingerprint(ph)(Graft.shardManifest(encoded, TargetTokens))),
-      Op("write_shards", "ops.Bpe", "write", ph => {
-        val out = s"$work/shards/pass$pass"
-        ph("execute")(Graft.writeTokenShards(encoded, TargetTokens, out))
-        Fp.Empty
-      }))
+        Io.fingerprint(ph)(Graft.shardManifest(encoded, TargetTokens))))
   }
-
-  override def afterPass(pass: Int): Unit = {
-    lastShardBytes = Io.bytes(s"$work/shards/pass$pass")
-    Io.delete(s"$work/shards/pass$pass")
-  }
-  private var lastShardBytes = 0L
 
   def checks(warm: Seq[Sample], timed: Seq[Sample]): Seq[(String, Boolean, String)] = {
     val kept = survivorIds.filter(hotIds)
@@ -230,7 +208,7 @@ final class CurateWorkload(spark: SparkSession, data: String, work: String) exte
         "cal_scan_agg_ms" -> Layers.calScanAgg(spark, s"$data/cal_lineitem.parquet"))
   }
 
-  def storedBytes: (Long, Long) = (lastShardBytes, Io.bytes(s"$data/corpus.parquet"))
+  def storedBytes: (Long, Long) = (0L, Io.bytes(s"$data/corpus.parquet"))
 }
 
 /** The stored-index lifecycle: four indexes (BM25, IVF-PQ, band, Bloom)
@@ -247,37 +225,38 @@ final class ServeWorkload(spark: SparkSession, data: String, work: String) exten
   private val base = s"$work/base"
   private val rebuilt = s"$work/rebuilt"
 
-  /** Two set-up rounds of the same shape, four index builds each: the
-    * base indexes the passes refresh, then the reference indexes built
-    * from scratch over the final state (base plus every delta) that the
-    * refreshed == rebuilt check serves from. */
-  override def setupRounds: Int = 2
-
   private def paths(root: String) = (s"$root/bm25", s"$root/ann", s"$root/band", s"$root/bloom")
 
   private def deltas(kind: String) = (1 to Generations).map(k => t(s"delta${k}_$kind"))
 
+  /** Builds the base indexes the passes refresh, once: a second build
+    * would not fit the run's time budget. */
+  override def setupRounds: Int = 1
+
   def prepare(round: Int): Unit = {
-    val root = if (round == 1) base else rebuilt
-    Io.delete(root)
-    val (bm, an, bd, bl) = paths(root)
-    if (round == 1) {
-      Graft.writeBm25Index(t("corpus"), bm)
-      Graft.writeAnnIndex(t("vectors"), an)
-      Graft.writeBandIndex(t("corpus"), bd)
-      Graft.writeBloomIndex(t("eval"), bl)
-    } else {
-      Graft.writeBm25Index((t("corpus") +: deltas("docs")).reduce(_.unionByName(_)), bm)
-      // IVF-PQ keeps its quantizers frozen across refreshes, so the
-      // reference re-encodes the final vectors under the base quantizers.
-      val (cents, cb, _) = Graft.readAnnIndex(spark, s"$base/ann")
-      cents.write.parquet(s"$an/centroids")
-      cb.write.parquet(s"$an/codebook")
-      Graft.ivfPqEncodeStream(applyFeeds(t("vectors"), "vec_id", "v", deltas("vectors")), cents, cb)
-        .write.parquet(s"$an/codes")
-      Graft.writeBandIndex(applyFeeds(t("corpus"), "doc_id", "text", deltas("band")), bd)
-      Graft.writeBloomIndex((t("eval") +: deltas("eval")).reduce(_.unionByName(_)), bl)
-    }
+    Io.delete(base)
+    val (bm, an, bd, bl) = paths(base)
+    Graft.writeBm25Index(t("corpus"), bm)
+    Graft.writeAnnIndex(t("vectors"), an)
+    Graft.writeBandIndex(t("corpus"), bd)
+    Graft.writeBloomIndex(t("eval"), bl)
+  }
+
+  /** The reference indexes for the refreshed == rebuilt check, built
+    * from scratch over the final state (base plus every delta). */
+  override def reference(): Unit = {
+    Io.delete(rebuilt)
+    val (bm, an, bd, bl) = paths(rebuilt)
+    Graft.writeBm25Index((t("corpus") +: deltas("docs")).reduce(_.unionByName(_)), bm)
+    // IVF-PQ keeps its quantizers frozen across refreshes, so the
+    // reference re-encodes the final vectors under the base quantizers.
+    val (cents, cb, _) = Graft.readAnnIndex(spark, s"$base/ann")
+    cents.write.parquet(s"$an/centroids")
+    cb.write.parquet(s"$an/codebook")
+    Graft.ivfPqEncodeStream(applyFeeds(t("vectors"), "vec_id", "v", deltas("vectors")), cents, cb)
+      .write.parquet(s"$an/codes")
+    Graft.writeBandIndex(applyFeeds(t("corpus"), "doc_id", "text", deltas("band")), bd)
+    Graft.writeBloomIndex((t("eval") +: deltas("eval")).reduce(_.unionByName(_)), bl)
   }
 
   private def searches(root: String, g: Int): Seq[Op] = {
@@ -339,13 +318,10 @@ final class ServeWorkload(spark: SparkSession, data: String, work: String) exten
         .unionByName(d.filter(col("status") =!= "removed").select(col(id), col(value)))
     }
 
-  /** The warm-up pass refreshes like a timed pass but serves its
-    * searches from the reference indexes, so the cross-pass comparison
-    * of each search is the refreshed == rebuilt check. */
-  override def warmupOps(pass: Int): Seq[Op] = {
-    val timed = ops(pass)
-    timed.filter(_.kind == "write") ++ searches(rebuilt, Generations)
-  }
+  /** The warm-up pass serves the searches from the reference indexes,
+    * so the cross-pass comparison of each search is the refreshed ==
+    * rebuilt check. The set-up and reference builds warm the write path. */
+  override def warmupOps(pass: Int): Seq[Op] = searches(rebuilt, Generations)
 
   def checks(warm: Seq[Sample], timed: Seq[Sample]): Seq[(String, Boolean, String)] = {
     val rebuiltFp = warm.map(s => s.op -> s.fp).toMap

@@ -1,11 +1,11 @@
 #!/usr/bin/env python3
 """Run the benchmark's own tests from the repository root:
 
-    python3 perfbench/tests/run_tests.py [GRAFT_CLASSES_DIR]
+    python3 perfbench/tests/run_tests.py
 
 Compiles the harness and tests/SelfTest.scala against graft's compiled
-classes (default: target/scala-2.13/classes from `sbt compile`; if absent,
-the benchmark's own cached build) and the Spark jars, runs them, then
+classes (target/scala-2.13/classes from `sbt compile`; if absent, the
+benchmark's own cached build) and the Spark jars, runs them, then
 runs the generator tests.
 """
 import os
@@ -22,7 +22,7 @@ import run  # noqa: E402
 def main():
     root = os.getcwd()
     jars = run.spark_jars(root)
-    graft = sys.argv[1] if len(sys.argv) > 1 else os.path.join(root, "target/scala-2.13/classes")
+    graft = os.path.join(root, "target/scala-2.13/classes")
     if not os.path.isdir(graft):
         graft = run.build(root, jars)[1]
     _, bench = run.sources(root)
